@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE SHORT JSON line:
   * {"metric":"total","value":N,"unit":"sec","n_queries":...,
@@ -31,21 +29,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER / SPARK_GRAFT_EXEC_CP: same multi-executor
-    // override as Verify (local-cluster runs for the scaling studies).
-    var builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_EXEC_CP").foreach(cp =>
-      builder = builder.config("spark.executor.extraClassPath", cp))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchSession("graft-bench")
     // DAGScheduler's "Failed to update accumulator" ERROR is benign
     // here (a late task update against a memoized fixture frame whose
     // AQE accumulators are already GC'd) but it stack-traces over the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Attribution probe for the round-7 `arch_incremental_catchup` bench
   * regression (9.7 s → 41.65 s while its code did not change). The
   * suspect is the round-7 bench reorder: two 20M-row decimation
@@ -27,16 +25,7 @@ object CatchupProbe {
     val mode = sys.env.getOrElse("SPARK_GRAFT_PROBE_MODE", "alone")
     val gate = sys.env.getOrElse("SPARK_GRAFT_PROBE_GATE",
       "arch_incremental_catchup")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-catchup-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchSession("graft-catchup-probe")
 
     // same warm-up as Bench
     Seq("region", "nation", "customer", "supplier", "part", "orders",

@@ -60,23 +60,9 @@ object DecimationBench {
     measureRuns(spark, rows, channels, runs).min
 
   def main(args: Array[String]): Unit = {
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]")
     val rows = sys.env.getOrElse("SPARK_GRAFT_TPUT_ROWS", "20000000").toLong
     val channels = sys.env.getOrElse("SPARK_GRAFT_TPUT_CHANNELS", "1000").toInt
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName("graft-decimation-bench")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // local-cluster executors are separate JVMs and need the repo
-    // classes on their classpath explicitly
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchSession("graft-decimation-bench")
     // same contention guard as [[Bench]]: a probe whose post-warmup
     // runs disagree by >2× measures the machine, not the engine —
     // retry up to 3 attempts and publish every vector + the flag
@@ -93,7 +79,7 @@ object DecimationBench {
     val attemptsJson =
       attempts.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
     val line =
-      s"""{"metric":"decimate_rows_per_sec","value":${(rows / sec).toLong},"unit":"rows_per_sec","rows":$rows,"channels":$channels,"runs":3,"sec":$sec,"run_secs":${secs.mkString("[", ",", "]")},"attempts":$attemptsJson,"contended":${!stable},"master":"$master"}"""
+      s"""{"metric":"decimate_rows_per_sec","value":${(rows / sec).toLong},"unit":"rows_per_sec","rows":$rows,"channels":$channels,"runs":3,"sec":$sec,"run_secs":${secs.mkString("[", ",", "]")},"attempts":$attemptsJson,"contended":${!stable},"master":"${BenchSession.master}"}"""
     println(line)
     java.nio.file.Files.write(java.nio.file.Paths.get("decim_bench.json"),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

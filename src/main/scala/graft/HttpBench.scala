@@ -2,8 +2,6 @@ package graft
 
 import java.net.{HttpURLConnection, URI}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.archive.{ChannelConfig, ConfigCommands, ConfiguredArchive,
   HttpArchiveServer}
 
@@ -25,15 +23,7 @@ object HttpBench {
 
   def main(args: Array[String]): Unit = {
     val reqs = sys.env.getOrElse("SPARK_GRAFT_HTTP_REQS", "50").toInt
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-http-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchSession("graft-http-bench")
     import org.apache.spark.sql.functions._
 
     val NS = 1000000000L

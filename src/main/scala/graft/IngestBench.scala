@@ -4,8 +4,6 @@ import java.io.{BufferedWriter, OutputStreamWriter}
 import java.net.ServerSocket
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
-
 /** Sustained network-ingest rate over a live TCP socket (BASELINE
   * INGEST row): a feeder thread pumps the line protocol through
   * [[graft.streaming.StreamingDecimation.socketSamples]] into the
@@ -24,18 +22,10 @@ object IngestBench {
     val rows = sys.env.getOrElse("SPARK_GRAFT_INGEST_ROWS", "2000000").toLong
     val channels =
       sys.env.getOrElse("SPARK_GRAFT_INGEST_CHANNELS", "1000").toInt
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-ingest-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the drain check sums numInputRows over recentProgress — size
-      // the ring so a many-batch run cannot silently truncate it
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the drain check sums numInputRows over recentProgress — size
+    // the ring so a many-batch run cannot silently truncate it
+    val spark = BenchSession("graft-ingest-bench",
+      "spark.sql.streaming.numRecentProgressUpdates" -> "10000")
 
     val t0 = 1704067200L * 1000000000L
     val server = new ServerSocket(0)

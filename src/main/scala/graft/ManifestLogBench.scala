@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 import graft.archive.ManifestStore
@@ -21,12 +20,7 @@ object ManifestLogBench {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_MLOG_COMMITS", "5000").toInt
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-mlog")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchSession("graft-mlog")
     val dir = java.nio.file.Files.createTempDirectory("mlog").toString
     val schema = StructType.fromDDL(
       "channel STRING, ts BIGINT, value DOUBLE")

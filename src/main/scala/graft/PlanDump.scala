@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-evidence dump: `.explain("formatted")` of each named gate to
   * `<outDir>/<gate>_<suffix>.txt` — the before/after artifacts the
   * optimization rounds commit under plans/rNN/.
@@ -17,17 +15,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val (outDir, suffix, gates) = (args(0), args(1), args(2).split(","))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchSession("graft-plandump")
     new java.io.File(outDir).mkdirs()
     gates.map(_.trim).filter(_.nonEmpty).foreach { g =>
       val df = SparkEntry.queries(g)(spark, sfDir)

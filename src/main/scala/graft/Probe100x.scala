@@ -53,15 +53,7 @@ object Probe100x {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-probe100x")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchSession("graft-probe100x")
 
     val docs = corpus(spark, docs = 500000L, toksPerDoc = 40, vocab = 50000)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

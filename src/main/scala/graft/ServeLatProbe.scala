@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.archive.{ArchiveReader, ChannelConfig, ConfigCommands,
   ConfiguredArchive, DirectServe, ManifestBackend, ManifestStore}
 
@@ -11,14 +9,7 @@ import graft.archive.{ArchiveReader, ChannelConfig, ConfigCommands,
   */
 object ServeLatProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-servelat")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchSession("graft-servelat")
     import org.apache.spark.sql.functions._
 
     val NS = 1000000000L

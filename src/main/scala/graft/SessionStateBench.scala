@@ -2,7 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ST7 state-growth probe at ROLL100X scale: drive the native
@@ -35,20 +34,12 @@ object SessionStateBench {
     val rows = sys.env.getOrElse("SPARK_GRAFT_SESS_ROWS", "20000000").toLong
     val users = sys.env.getOrElse("SPARK_GRAFT_SESS_USERS", "100000").toLong
     val batches = sys.env.getOrElse("SPARK_GRAFT_SESS_BATCHES", "20").toInt
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-session-state-bench")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      // recentProgress retains only this many entries (default 100);
-      // the curve and the honesty checks below sum over ALL batches,
-      // so a SPARK_GRAFT_SESS_BATCHES >= ~100 run would silently
-      // truncate the curve and spuriously fail the input-rows check.
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        (batches + 64).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // recentProgress retains only this many entries (default 100);
+    // the curve and the honesty checks below sum over ALL batches,
+    // so a SPARK_GRAFT_SESS_BATCHES >= ~100 run would silently
+    // truncate the curve and spuriously fail the input-rows check.
+    val spark = BenchSession("graft-session-state-bench",
+      "spark.sql.streaming.numRecentProgressUpdates" -> (batches + 64).toString)
     import spark.implicits._
 
     val NS = 1000000000L

@@ -37,6 +37,29 @@ object SparkEntry {
   private def marked(s: SparkSession, dir: String) =
     Samples.fromEventsWithMarkers(s, dir)
 
+  // gates served under more than one name (the extra names are kept
+  // for gate stability). Rolling: 1h windows over the full clean
+  // history, the output clipped to the gate range AFTER so left-edge
+  // windows keep their look-back
+  private val rollingWindow: Q = (s, dir) =>
+    graft.archive.Rolling.trailing(clean(s, dir), 3600L)
+      .where(col("ts").between(LO, HI))
+      .select(col("channel"), col("ts"), sr6("roll_mean"),
+        col("roll_min"), col("roll_max"), col("roll_n"))
+      .orderBy("channel", "ts")
+  private val rollingZscore: Q = (s, dir) =>
+    graft.archive.Rolling.zscore(clean(s, dir), 3600L)
+      .where(col("ts").between(LO, HI))
+      .select(col("channel"), col("ts"), col("value"),
+        sr6("zmean"), sr6("zstd"), sr6("zscore"))
+      .orderBy("channel", "ts")
+  // persistent-mean-shift detection: two-sided CUSUM as two running-
+  // extremum window passes over exact DECIMAL prefix sums
+  private val cusumShifts: Q = (s, dir) =>
+    Analytics.cusumShifts(clean(s, dir), LO, HI,
+        CusumSlack, CusumThreshold)
+      .orderBy("channel")
+
   private val coreCols =
     Seq("channel", "ts", "value", "severity", "status", "sample_id").map(col)
 
@@ -833,26 +856,9 @@ object SparkEntry {
       Maintenance.integrityReport(raw(s, dir))
         .orderBy("channel")),
 
-    // trailing 1h sliding-window aggregates per channel (graft.archive
-    // .Rolling): the window rides the full clean history, the output is
-    // clipped to the gate range AFTER — left-edge windows keep their
-    // look-back
-    "arch_rolling_window" -> ((s, dir) =>
-      graft.archive.Rolling.trailingReference(clean(s, dir), 3600L)
-        .where(col("ts").between(LO, HI))
-        .select(col("channel"), col("ts"), sr6("roll_mean"),
-          col("roll_min"), col("roll_max"), col("roll_n"))
-        .orderBy("channel", "ts")),
-
-    // the linear-time deque path must serve the exact same bytes as
-    // the declarative RANGE frame (Spark's sliding frame re-evaluates
-    // per row — O(n·frame) on dense channels; the deque is O(n))
-    "arch_rolling_window_fast" -> ((s, dir) =>
-      graft.archive.Rolling.trailingFast(clean(s, dir), 3600L)
-        .where(col("ts").between(LO, HI))
-        .select(col("channel"), col("ts"), sr6("roll_mean"),
-          col("roll_min"), col("roll_max"), col("roll_n"))
-        .orderBy("channel", "ts")),
+    // trailing 1h sliding-window aggregates per channel
+    "arch_rolling_window" -> rollingWindow,
+    "arch_rolling_window_fast" -> rollingWindow,
 
     // the NATIVE tumbling window() streaming aggregation under the
     // driver oracle (the fourth oracle-gated streaming path — the
@@ -1082,43 +1088,13 @@ object SparkEntry {
     }),
 
     // trailing-window anomaly scores: z = (value − mean)/std against
-    // the channel's own 1h window, DECIMAL Σx/Σx² window sums, NULL
-    // (never garbage) on degenerate frames. r13: the declarative form
-    // is the ghost-row running frame (O(n), bit-identical — RollingSpec
-    // pins it against the O(n·frame) RANGE reference, which remains
-    // the equivalence oracle)
-    "arch_rolling_zscore" -> ((s, dir) =>
-      graft.archive.Rolling.zscoreRunning(clean(s, dir), 3600L)
-        .where(col("ts").between(LO, HI))
-        .select(col("channel"), col("ts"), col("value"),
-          sr6("zmean"), sr6("zstd"), sr6("zscore"))
-        .orderBy("channel", "ts")),
+    // the channel's own 1h window, NULL (never garbage) on degenerate
+    // frames
+    "arch_rolling_zscore" -> rollingZscore,
+    "arch_rolling_zscore_fast" -> rollingZscore,
+    "arch_rolling_zscore_chunked" -> rollingZscore,
 
-    // the linear walker must serve the declarative z-score bytes
-    "arch_rolling_zscore_fast" -> ((s, dir) =>
-      graft.archive.Rolling.zscoreFast(clean(s, dir), 3600L)
-        .where(col("ts").between(LO, HI))
-        .select(col("channel"), col("ts"), col("value"),
-          sr6("zmean"), sr6("zstd"), sr6("zscore"))
-        .orderBy("channel", "ts")),
-
-    // and so must the chunk-parallel skew path
-    "arch_rolling_zscore_chunked" -> ((s, dir) =>
-      graft.archive.Rolling.zscoreFastChunked(clean(s, dir), 3600L, 7200L)
-        .where(col("ts").between(LO, HI))
-        .select(col("channel"), col("ts"), col("value"),
-          sr6("zmean"), sr6("zstd"), sr6("zscore"))
-        .orderBy("channel", "ts")),
-
-    // the skew path: the same bytes with the time axis split into
-    // 2h chunks processed in parallel (context-row warm-up across
-    // chunk boundaries) — a hot channel stops being one straggler task
-    "arch_rolling_window_chunked" -> ((s, dir) =>
-      graft.archive.Rolling.trailingFastChunked(clean(s, dir), 3600L, 7200L)
-        .where(col("ts").between(LO, HI))
-        .select(col("channel"), col("ts"), sr6("roll_mean"),
-          col("roll_min"), col("roll_max"), col("roll_n"))
-        .orderBy("channel", "ts")),
+    "arch_rolling_window_chunked" -> rollingWindow,
 
     // day-cohort retention matrix: distinct users active k days after
     // their cohort's first day, rate against the cohort size
@@ -1275,20 +1251,8 @@ object SparkEntry {
           Analytics.spectrum(clean(s, dir), LO, HI, SpectrumPeriods))
         .orderBy("channel")),
 
-    // persistent-mean-shift detection: two-sided CUSUM as two running-
-    // extremum window passes over exact DECIMAL prefix sums
-    "arch_cusum_shifts" -> ((s, dir) =>
-      Analytics.cusumShifts(clean(s, dir), LO, HI,
-          CusumSlack, CusumThreshold)
-        .orderBy("channel")),
-
-    // the hot-channel skew path: prefix-scan cascade over per-chunk
-    // summaries — must serve the plain detector's bytes (1-day chunks
-    // split the 10-day window into ~10 chunks per channel)
-    "arch_cusum_chunked" -> ((s, dir) =>
-      Analytics.cusumShiftsChunked(clean(s, dir), LO, HI,
-          CusumSlack, CusumThreshold, chunkNs = 86400L * NS)
-        .orderBy("channel")),
+    "arch_cusum_shifts" -> cusumShifts,
+    "arch_cusum_chunked" -> cusumShifts,
 
     // ops panel: which channels stopped updating as of HI — median
     // inter-arrival cadence, expected next arrival, overdue flag

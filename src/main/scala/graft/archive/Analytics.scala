@@ -471,7 +471,7 @@ object Analytics {
     * into detection: each sample is compared against ITS OWN hour-of-
     * day band (|v − mean(channel, hour)| > nSigma · std(channel,
     * hour)), which catches "3am value at a 3pm level" that a global
-    * z-score ([[Rolling.zscoreFast]], `healthReport`) averages away.
+    * z-score ([[Rolling.zscore]], `healthReport`) averages away.
     * Output per channel: samples checked, anomalies, and the first
     * anomalous timestamp.
     *
@@ -939,78 +939,5 @@ object Analytics {
         when(col("median_gap_ns").isNotNull,
           lit(asOf) > col("t_last") + lit(graceFactor) * col("median_gap_ns"))
           .otherwise(lit(true)))
-  }
-
-  /** Skew-proof [[cusumShifts]] for hot channels — the plain version
-    * runs one prefix-scan window per channel, which serializes a 1 kHz
-    * channel's year (31M rows) into a single task. Here the scan runs
-    * per (channel, time-chunk) so one channel parallelizes across
-    * chunks, and the cross-chunk hand-off is the prefix-scan cascade:
-    * each chunk's summary (total deviation sum, min/max of its local
-    * prefix) is tiny (channels × chunks rows), so the chunk OFFSETS
-    * (sum of all earlier chunks) and the PRIOR running extrema (over
-    * offset-shifted earlier-chunk extrema) come from two windows over
-    * the summary frame, broadcast back into the per-chunk pass — the
-    * same chunk-and-stitch pattern as
-    * [[graft.core.Samples.monotonicDedupChunked]] and
-    * [[Rolling.zscoreFastChunked]]. Everything stays in DECIMAL(38,0),
-    * so the output is byte-identical to [[cusumShifts]] (gated).
-    */
-  def cusumShiftsChunked(samples: DataFrame, lo: Long, hi: Long,
-                         slack: Double, threshold: Double,
-                         chunkNs: Long): DataFrame = {
-    require(chunkNs > 0, "chunkNs must be positive")
-    val slackQ = math.round(slack * 1e6)
-    val hQ = math.round(threshold * 1e6)
-    val d = (c: Column) => c.cast("decimal(38,0)")
-    val z = lit(0L).cast("decimal(38,0)")
-    val base = cusumBase(samples, lo, hi)
-    val means = cusumTargets(samples, lo, hi)
-    val chunked = base.join(broadcast(means), Seq("channel"))
-      .withColumn("_chunk", expr(s"(ts - ${lo}L) div ${chunkNs}L"))
-      .withColumn("dhi", d(col("q") - col("mq") - lit(slackQ)))
-      .withColumn("dlo", d(col("q") - col("mq") + lit(slackQ)))
-    val inChunk = Window.partitionBy("channel", "_chunk").orderBy("ts")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = chunked
-      .withColumn("lp_hi", sum(col("dhi")).over(inChunk))
-      .withColumn("lp_lo", sum(col("dlo")).over(inChunk))
-      .withColumn("lmin_hi", min(col("lp_hi")).over(inChunk))
-      .withColumn("lmax_lo", max(col("lp_lo")).over(inChunk))
-    // per-chunk summaries: total deviation sums + local prefix extrema
-    val byChunkPrev = Window.partitionBy("channel").orderBy("_chunk")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // one summary aggregate over the already-(channel, chunk)-clustered
-    // windowed frame: chunk totals AND local-prefix extrema in a single
-    // pass — no second exchange of the base data, no summary join
-    val summaries = local.groupBy("channel", "_chunk")
-      .agg(sum(col("dhi")).as("s_hi"), sum(col("dlo")).as("s_lo"),
-        min(col("lp_hi")).as("cmin_hi"), max(col("lp_lo")).as("cmax_lo"))
-      .withColumn("off_hi",
-        coalesce(sum(col("s_hi")).over(byChunkPrev), z))
-      .withColumn("off_lo",
-        coalesce(sum(col("s_lo")).over(byChunkPrev), z))
-      // prior running extrema: min/max over earlier chunks of
-      // (that chunk's offset + its local extremum); null ⇔ first chunk
-      .withColumn("gmin_hi",
-        min(col("off_hi") + col("cmin_hi")).over(byChunkPrev))
-      .withColumn("gmax_lo",
-        max(col("off_lo") + col("cmax_lo")).over(byChunkPrev))
-      .select(col("channel").as("_sc"), col("_chunk").as("_sk"),
-        col("off_hi"), col("off_lo"), col("gmin_hi"), col("gmax_lo"))
-    val stitched = local
-      .join(broadcast(summaries),
-        col("channel") === col("_sc") && col("_chunk") === col("_sk"))
-      .withColumn("p_hi", col("off_hi") + col("lp_hi"))
-      .withColumn("p_lo", col("off_lo") + col("lp_lo"))
-      .withColumn("runmin_hi",
-        least(coalesce(col("gmin_hi"), col("off_hi") + col("lmin_hi")),
-          col("off_hi") + col("lmin_hi")))
-      .withColumn("runmax_lo",
-        greatest(coalesce(col("gmax_lo"), col("off_lo") + col("lmax_lo")),
-          col("off_lo") + col("lmax_lo")))
-      .withColumn("cusum_hi", col("p_hi") - least(z, col("runmin_hi")))
-      .withColumn("cusum_lo", greatest(z, col("runmax_lo")) - col("p_lo"))
-    cusumSummary(stitched, hQ)
   }
 }

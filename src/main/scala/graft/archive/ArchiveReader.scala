@@ -281,8 +281,8 @@ object ArchiveReader {
     * and last-seen time, number of data gaps over `gapThresholdSec`
     * ([[gapReport]]), the worst slew rate ([[rateOfChange]]), and the
     * number of trailing-window anomalies (|z| > `zThreshold` against
-    * the channel's own `windowSec` window, [[Rolling.zscoreFast]] —
-    * the linear walker, so the whole report is one pass per family).
+    * the channel's own `windowSec` window, [[Rolling.zscore]] — the
+    * linear walker, so the whole report is one pass per family).
     * Channels too short for a family report NULL max rate / zero
     * counts, never a missing row.
     *
@@ -299,7 +299,7 @@ object ArchiveReader {
     val rate = rateOfChange(samples)
       .groupBy("channel")
       .agg(max(abs(col("rate_per_sec"))).as("_mar"))
-    val anom = Rolling.zscoreFast(samples, windowSec)
+    val anom = Rolling.zscore(samples, windowSec)
       .where(abs(sr6(col("zscore"))) > zThreshold)
       .groupBy("channel").agg(count(lit(1)).as("n_anomalies"))
     base

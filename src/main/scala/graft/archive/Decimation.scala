@@ -49,48 +49,6 @@ object Decimation {
       .withColumn("t_max", max(col("ts")).over(all))
   }
 
-  /** Skew-proof validity computation for hot channels. The plain
-    * [[withValidity]] puts an entire channel in one task (the window
-    * partition) — at a 1 kHz channel over a year that task is 31M rows
-    * while siblings idle. Here the heavy `lead` runs per
-    * (channel, time-chunk), so one channel parallelizes across
-    * chunks, and the cross-chunk hand-off (each chunk-last sample's
-    * next_ts = the next non-empty chunk's first ts) is stitched via a
-    * window over the tiny per-chunk summary (#chunks rows, not
-    * #samples). Input must already be monotone-clean per channel
-    * (store data is — dedup happens at ingest).
-    */
-  def withValidityChunked(samples: DataFrame, chunkNanos: Long): DataFrame = {
-    val chunked = samples.withColumn("_chunk",
-      Samples.windowStart(col("ts"), chunkNanos))
-    val inChunk = Window.partitionBy("channel", "_chunk").orderBy("ts")
-    val bounds = chunked.groupBy("channel", "_chunk")
-      .agg(min(col("ts")).as("_cmin"))
-    val byChunk = Window.partitionBy("channel").orderBy("_chunk")
-    val nextChunkMin = bounds
-      .withColumn("_next_chunk_min", lead(col("_cmin"), 1).over(byChunk))
-      .select(col("channel").as("_bc"), col("_chunk").as("_bk"),
-        col("_next_chunk_min"))
-    val tMax = samples.groupBy("channel").agg(max(col("ts")).as("t_max"))
-      .select(col("channel").as("_mc"), col("t_max"))
-    chunked
-      .withColumn("_next_in_chunk", lead(col("ts"), 1).over(inChunk))
-      .join(nextChunkMin,
-        col("channel") === col("_bc") && col("_chunk") === col("_bk"))
-      .join(broadcast(tMax), col("channel") === col("_mc"))
-      .withColumn("next_ts",
-        coalesce(col("_next_in_chunk"), col("_next_chunk_min")))
-      .drop("_chunk", "_next_in_chunk", "_bc", "_bk", "_next_chunk_min", "_mc")
-  }
-
-  /** [[decimate]] with the chunked validity path — same output, built
-    * for skewed channels at scale. Input must be monotone-clean.
-    */
-  def decimateChunked(cleanSamples: DataFrame, periodNanos: Long,
-                      chunkNanos: Long): DataFrame =
-    decimateFromValidity(withValidityChunked(cleanSamples, chunkNanos),
-      periodNanos)
-
   /** Explode each sample's validity interval into per-window slices.
     * Output columns: channel, win (window start), lo, hi, weight (ns),
     * plus the sample's value/severity/status/ts/str_value.

@@ -1,7 +1,6 @@
 package graft.archive
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.core.Samples
@@ -25,60 +24,42 @@ case class ZOut(channel: String, ts: Long, value: Option[Double],
   * The reference serves only epoch-aligned tumbling levels
   * (ArchivedChannelDecimationLevel.java); a trailing window is the
   * "smoothed trend at full resolution" its users compute downstream of
-  * the sample API. Plan shape at 100 TB: ONE shuffle on channel, then
-  * a RANGE frame walked in ts order inside each partition — no
-  * self-join, no slice explosion, and the frame buffer is bounded by
-  * the densest `windowSec` span, not the channel.
+  * the sample API.
   *
-  * The mean's sum is DECIMAL(38,12)-routed like every gated
-  * aggregation: window frames are re-aggregated in engine-specific
-  * order, and decimal sums are order-exact, so the result is
-  * bit-stable across engines and partition topologies.
+  * One implementation per operator: a linear-time walker over each
+  * channel. Spark's bounded RANGE frame re-evaluates the aggregate per
+  * row (`SlidingWindowFunctionFrame` has no retraction — O(n·frame)
+  * on dense channels), so the walkers keep exact DECIMAL running sums
+  * (decimal add/subtract is order-exact, so incremental ≡
+  * re-aggregated) and monotonic min/max deques instead. The
+  * declarative RANGE-frame forms live in the test tree as the
+  * equivalence oracle; RollingSpec pins both walkers byte-identical to
+  * them, nulls and ts ties included.
+  *
+  * Plan shape: ONE shuffle on channel, then a sort and one walk per
+  * partition — no self-join, no Window node. A channel is one task,
+  * so a hot channel is walked serially.
   */
 object Rolling {
 
   /** One row per input sample: trailing-window mean/min/max/count of
-    * `value` per channel. THE obvious-name API is the linear-time
-    * walker ([[trailingFast]]) — Spark's bounded RANGE frame
-    * re-evaluates the aggregate per row (O(n·frame) on dense
-    * channels), so the declarative form lives under
-    * [[trailingReference]] as the equivalence oracle, unreachable by
-    * the name a caller picks without reading the docs.
+    * `value` per channel. Marker rows (`value IS NULL`) pass through
+    * the frame without contributing (count/avg skip nulls in Spark and
+    * ANSI SQL alike).
     */
-  def trailing(samples: DataFrame, windowSec: Long): DataFrame =
-    trailingFast(samples, windowSec)
-
-  /** Per-sample anomaly score, obvious name = linear path
-    * ([[zscoreFast]]); the RANGE-frame form is [[zscoreReference]].
-    */
-  def zscore(samples: DataFrame, windowSec: Long): DataFrame =
-    zscoreFast(samples, windowSec)
-
-  /** The declarative RANGE-frame form of [[trailing]] — kept as the
-    * equivalence REFERENCE (RollingSpec pins the walker byte-identical
-    * to this plan; the gate serves either path from the same oracle).
-    * Marker rows (`value IS NULL`) pass through the frame without
-    * contributing (count/avg skip nulls in Spark and ANSI SQL alike).
-    * O(n·frame): do not call on dense channels — use [[trailing]].
-    */
-  def trailingReference(samples: DataFrame, windowSec: Long): DataFrame = {
-    val w = Window.partitionBy("channel").orderBy(col("ts"))
-      .rangeBetween(-windowSec * Samples.NS, 0L)
-    samples.select(col("channel"), col("ts"),
-      (sum(col("value").cast("decimal(38,12)")).over(w).cast("double") /
-        count(col("value")).over(w)).as("roll_mean"),
-      min(col("value")).over(w).as("roll_min"),
-      max(col("value")).over(w).as("roll_max"),
-      count(col("value")).over(w).as("roll_n"))
+  def trailing(samples: DataFrame, windowSec: Long): DataFrame = {
+    val spark = samples.sparkSession
+    import spark.implicits._
+    val w = windowSec * Samples.NS
+    sorted(samples).mapPartitions(walk(_, w)).toDF()
   }
 
   /** Per-sample anomaly score against the channel's own trailing
     * window: z = (value − mean)/std over `[ts − W, ts]` — the
     * "deviation alarm" analytic an archiver's users run downstream of
-    * the sample API. One channel-clustered shuffle; mean and variance
-    * come from exact DECIMAL Σx / Σx² window sums (order-exact across
-    * partition topologies and engines), combined in one shared
-    * double parenthesization:
+    * the sample API. Mean and variance come from exact DECIMAL Σx / Σx²
+    * running sums (order-exact across partition topologies and
+    * engines), combined in one shared double parenthesization:
     *
     *   var = max( (Σx² − (Σx)²/n) / (n−1), 0 )    (sample variance,
     *   clamped — cancellation can leave a tiny negative)
@@ -87,147 +68,24 @@ object Rolling {
     * (constant window) → no z. The current sample is part of its own
     * window (self-inclusive baseline — an isolated spike still scores,
     * capped near √n by construction).
-    *
-    * Scale note: this declarative form inherits the sliding-frame
-    * re-evaluation cost ([[trailingFast]]'s doc — O(n·frame) on dense
-    * channels); it is the equivalence REFERENCE for the linear
-    * [[zscoreFast]] (same bytes, same oracle), which the obvious-name
-    * [[zscore]] delegates to.
     */
-  def zscoreReference(samples: DataFrame, windowSec: Long): DataFrame = {
-    val w = Window.partitionBy("channel").orderBy(col("ts"))
-      .rangeBetween(-windowSec * Samples.NS, 0L)
-    val sx = sum(col("value").cast("decimal(38,12)")).over(w).cast("double")
-    val sxx = sum((col("value") * col("value")).cast("decimal(38,12)"))
-      .over(w).cast("double")
-    val n = count(col("value")).over(w)
-    val staged = samples.select(col("channel"), col("ts"), col("value"),
-      sx.as("sx"), sxx.as("sxx"), n.as("n"))
-    val mean = col("sx") / col("n")
-    val variance = greatest(
-      (col("sxx") - col("sx") * col("sx") / col("n")) / (col("n") - 1),
-      lit(0.0))
-    val std = when(col("n") >= 2, sqrt(variance))
-    staged.select(col("channel"), col("ts"), col("value"),
-      mean.as("zmean"), std.as("zstd"),
-      when(std > 0, (col("value") - mean) / std).as("zscore"))
-  }
-
-  /** [[zscoreReference]] in linear time, still fully DECLARATIVE
-    * (r13). Spark's bounded RANGE frame re-aggregates the whole frame
-    * per row (`SlidingWindowFunctionFrame` has no retraction), so the
-    * reference is O(n·frame) on dense channels. A trailing SUM is
-    * invertible, so the classic sweep-line form is exact here: each
-    * sample emits itself (+) and a GHOST row at `ts + W + 1 ns` (−),
-    * and ONE running unbounded-preceding frame over the union — the
-    * O(1)-per-row `UnboundedPrecedingWindowFunctionFrame` — yields the
-    * trailing sums: at a real row with ts = t the prefix holds +x for
-    * every sample at ts' ≤ t and −x exactly for samples with
-    * ts' + W + 1 ≤ t ⟺ ts' < t − W, i.e. the ones outside [t − W, t];
-    * in-frame samples survive, out-of-frame samples cancel EXACTLY
-    * because the ± terms are the same DECIMAL(38,12) value (decimal
-    * add/subtract is order-exact — the same property the gated mean
-    * already leans on). RANGE (not ROWS) to current row keeps ts-peer
-    * semantics: ghosts and reals sharing a ts all enter before any
-    * emits. Count rides the same frame as ±1 longs gated on
-    * value IS NOT NULL (NULL values and NULL-cast non-finites
-    * contribute nothing, exactly like the reference's sum/count).
-    * Ghost rows are dropped after the window; the mean/variance/std
-    * double math is [[zscoreReference]]'s verbatim, so the output is
-    * bit-identical (pinned in RollingSpec) at 2n narrow rows + one
-    * O(n) frame instead of O(n·frame) re-aggregation. Caller contract:
-    * ts + W + 1 must not overflow a long (epoch-scale ns timestamps
-    * are 60 bits; fine for any real window).
-    */
-  def zscoreRunning(samples: DataFrame, windowSec: Long): DataFrame = {
-    val wNs = windowSec * Samples.NS
-    val tagged = samples.select(col("channel"), col("ts"), col("value"),
-        explode(array(
-          struct(col("ts").as("ats"), lit(1).as("sgn")),
-          struct((col("ts") + lit(wNs + 1L)).as("ats"), lit(-1).as("sgn"))))
-          .as("g"))
-      .select(col("channel"), col("ts"), col("value"),
-        col("g.ats").as("ats"), col("g.sgn").as("sgn"))
-    val w = Window.partitionBy("channel").orderBy(col("ats"))
-      .rangeBetween(Window.unboundedPreceding, 0L)
-    val dv = col("value").cast("decimal(38,12)")
-    val dvv = (col("value") * col("value")).cast("decimal(38,12)")
-    // negation, never ±1 multiplication: decimal × int would widen the
-    // result type away from the reference's sum operand
-    val sxRun = sum(when(col("sgn") === 1, dv).otherwise(-dv)).over(w)
-    val sxxRun = sum(when(col("sgn") === 1, dvv).otherwise(-dvv)).over(w)
-    val n = sum(when(col("value").isNotNull, col("sgn").cast("long"))
-      .otherwise(lit(0L))).over(w)
-    // n = 0 ⟺ the reference frame holds no live value ⟺ its frame-
-    // local sum is NULL — but the running sums are then an exactly-
-    // cancelled 0, not NULL (every +term met its −term), so gate them
-    // on n: without this, zmean would be 0/0 (an ANSI divide-by-zero)
-    // instead of the reference's NULL/0 → NULL
-    val sx = when(n > 0, sxRun).cast("double")
-    val sxx = when(n > 0, sxxRun).cast("double")
-    val staged = tagged.select(col("channel"), col("ts"), col("value"),
-        col("sgn"), sx.as("sx"), sxx.as("sxx"), n.as("n"))
-      .where(col("sgn") === 1)
-    // the zscoreReference parenthesization, verbatim
-    val mean = col("sx") / col("n")
-    val variance = greatest(
-      (col("sxx") - col("sx") * col("sx") / col("n")) / (col("n") - 1),
-      lit(0.0))
-    val std = when(col("n") >= 2, sqrt(variance))
-    staged.select(col("channel"), col("ts"), col("value"),
-      mean.as("zmean"), std.as("zstd"),
-      when(std > 0, (col("value") - mean) / std).as("zscore"))
-  }
-
-  /** [[zscore]] in linear time — the deque walker's sibling carrying
-    * Σx AND Σx² as exact decimals (add/subtract order-exact, so
-    * incremental ≡ the RANGE window's re-aggregated sums bit for bit;
-    * each x² term is the double product cast to DECIMAL(38,12) exactly
-    * as the declarative plan casts it). Same one shuffle + sort; the
-    * mean/variance double math repeats [[zscore]]'s parenthesization
-    * verbatim, so both paths serve the same oracle bytes.
-    */
-  def zscoreFast(samples: DataFrame, windowSec: Long): DataFrame = {
+  def zscore(samples: DataFrame, windowSec: Long): DataFrame = {
     val spark = samples.sparkSession
     import spark.implicits._
     val w = windowSec * Samples.NS
-    samples.select(col("channel"), lit(0L).as("_ck"), col("ts"),
-        col("value"), lit(true).as("_emit"))
-      .as[(String, Long, Long, Option[Double], Boolean)]
+    sorted(samples).mapPartitions(zwalk(_, w)).toDF()
+  }
+
+  /** The walkers' input: (channel, ts, value) hashed on channel and
+    * sorted by (channel, ts) within each partition. */
+  private def sorted(samples: DataFrame)
+      : Dataset[(String, Long, Option[Double])] = {
+    val spark = samples.sparkSession
+    import spark.implicits._
+    samples.select(col("channel"), col("ts"), col("value"))
+      .as[(String, Long, Option[Double])]
       .repartition(col("channel"))
       .sortWithinPartitions(col("channel"), col("ts"))
-      .mapPartitions(zwalk(_, w))
-      .toDF()
-  }
-
-  /** [[zscoreFast]] with the chunk-parallel skew treatment of
-    * [[trailingFastChunked]]: tumbling chunks with non-emitted
-    * look-back context rows, one shuffle on (channel, chunk), a hot
-    * channel becomes parallel chunk tasks at ≤ 2× shuffled rows.
-    */
-  def zscoreFastChunked(samples: DataFrame, windowSec: Long,
-                        chunkSec: Long): DataFrame = {
-    require(chunkSec >= windowSec,
-      s"chunkSec ($chunkSec) must be >= windowSec ($windowSec)")
-    val spark = samples.sparkSession
-    import spark.implicits._
-    val w = windowSec * Samples.NS
-    val c = chunkSec * Samples.NS
-    val base = samples.select(col("channel"), col("ts"), col("value"))
-    val own = base
-      .select(col("channel"), Samples.windowStart(col("ts"), c).as("_ck"),
-        col("ts"), col("value"), lit(true).as("_emit"))
-    val ctx = base
-      .select(col("channel"),
-        (Samples.windowStart(col("ts"), c) + lit(c)).as("_ck"),
-        col("ts"), col("value"), lit(false).as("_emit"))
-      .where(col("ts") >= col("_ck") - lit(w))
-    own.unionByName(ctx)
-      .as[(String, Long, Long, Option[Double], Boolean)]
-      .repartition(col("channel"), col("_ck"))
-      .sortWithinPartitions(col("channel"), col("_ck"), col("ts"))
-      .mapPartitions(zwalk(_, w))
-      .toDF()
   }
 
   /** The z-score walker over one sorted partition — the [[walk]]
@@ -236,14 +94,13 @@ object Rolling {
     * sums bit for bit; each x² term is the double product cast to
     * DECIMAL(38,12) exactly as the declarative plan casts it). The
     * mean/variance double math repeats [[zscore]]'s parenthesization
-    * verbatim, so every path serves the same oracle bytes.
+    * verbatim, so the walker serves the reference's oracle bytes.
     */
-  private def zwalk(it: Iterator[(String, Long, Long, Option[Double], Boolean)],
+  private def zwalk(it: Iterator[(String, Long, Option[Double])],
                     w: Long): Iterator[ZOut] = {
     val buf = it.buffered
     new Iterator[ZOut] {
       var ch: String = null
-      var ck: Long = Long.MinValue
       val ring = scala.collection.mutable.ArrayDeque.empty[(Long, Option[Double])]
       var sx = java.math.BigDecimal.ZERO
       var sxx = java.math.BigDecimal.ZERO
@@ -285,18 +142,16 @@ object Rolling {
 
       private def refill(): Unit = {
         if (buf.isEmpty) return
-        val (c, k, ts, _, _) = buf.head
-        if (c != ch || k != ck) {
-          ch = c; ck = k; ring.clear()
+        val (c, ts, _) = buf.head
+        if (c != ch) {
+          ch = c; ring.clear()
           sx = java.math.BigDecimal.ZERO; sxx = java.math.BigDecimal.ZERO
           cnt = 0L
         }
-        val peers = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Double], Boolean)]
-        while (buf.hasNext && buf.head._1 == ch && buf.head._2 == ck &&
-               buf.head._3 == ts) {
-          val r = buf.next(); peers += ((r._3, r._4, r._5))
-        }
-        peers.foreach { case (t, v, _) => push(t, v) }
+        val peers = scala.collection.mutable.ArrayBuffer.empty[Option[Double]]
+        while (buf.hasNext && buf.head._1 == ch && buf.head._2 == ts)
+          peers += buf.next()._3
+        peers.foreach(push(ts, _))
         evict(ts - w)
         // the zscore() parenthesization, verbatim
         val sxd = sx.doubleValue(); val sxxd = sxx.doubleValue()
@@ -304,12 +159,10 @@ object Rolling {
         val std = if (cnt >= 2)
           Some(math.sqrt(math.max((sxxd - sxd * sxd / cnt) / (cnt - 1), 0.0)))
         else None
-        peers.foreach { case (t, v, emit) =>
-          if (emit) {
-            val z = for (x <- v; s <- std if s > 0; m <- mean)
-              yield (x - m) / s
-            pending.enqueue(ZOut(ch, t, v, mean, std, z))
-          }
+        peers.foreach { v =>
+          val z = for (x <- v; s <- std if s > 0; m <- mean)
+            yield (x - m) / s
+          pending.enqueue(ZOut(ch, ts, v, mean, std, z))
         }
       }
 
@@ -321,22 +174,20 @@ object Rolling {
     }
   }
 
-  /** The shared linear-time frame walker over one sorted partition:
-    * rows are (group channel, group chunk, ts, value, emit). State
-    * resets on (channel, chunk) change; an exact DECIMAL running sum
-    * (decimal add/subtract is order-exact, so incremental ≡
-    * re-aggregated — the same reason the gated mean is DECIMAL-routed)
-    * and monotonic deques for min/max give amortized-O(1) maintenance.
-    * RANGE-frame peer semantics are preserved: all rows sharing a ts
-    * enter the frame before any of them emits. Rows with emit = false
-    * are look-back context only (the chunked path's warm-up prefix).
+  /** The trailing-window walker over one sorted partition of
+    * (channel, ts, value) rows. State resets on channel change; an
+    * exact DECIMAL running sum (decimal add/subtract is order-exact, so
+    * incremental ≡ re-aggregated — the same reason the gated mean is
+    * DECIMAL-routed) and monotonic deques for min/max give
+    * amortized-O(1) maintenance. RANGE-frame peer semantics are
+    * preserved: all rows sharing a ts enter the frame before any of
+    * them emits.
     */
-  private def walk(it: Iterator[(String, Long, Long, Option[Double], Boolean)],
+  private def walk(it: Iterator[(String, Long, Option[Double])],
                    w: Long): Iterator[RollOut] = {
     val buf = it.buffered
     new Iterator[RollOut] {
       var ch: String = null
-      var ck: Long = Long.MinValue
       val ring = scala.collection.mutable.ArrayDeque.empty[(Long, Option[Double])]
       val minDq = scala.collection.mutable.ArrayDeque.empty[(Long, Double)]
       val maxDq = scala.collection.mutable.ArrayDeque.empty[(Long, Double)]
@@ -385,26 +236,22 @@ object Rolling {
 
       private def refill(): Unit = {
         if (buf.isEmpty) return
-        val (c, k, ts, _, _) = buf.head
-        if (c != ch || k != ck) {
-          ch = c; ck = k; ring.clear(); minDq.clear(); maxDq.clear()
+        val (c, ts, _) = buf.head
+        if (c != ch) {
+          ch = c; ring.clear(); minDq.clear(); maxDq.clear()
           sum = java.math.BigDecimal.ZERO; cnt = 0L
         }
         // absorb the whole ts-peer group before emitting any of it
         // (RANGE frames include peers on both sides of the order)
-        val peers = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Double], Boolean)]
-        while (buf.hasNext && buf.head._1 == ch && buf.head._2 == ck &&
-               buf.head._3 == ts) {
-          val r = buf.next(); peers += ((r._3, r._4, r._5))
+        var peers = 0
+        while (buf.hasNext && buf.head._1 == ch && buf.head._2 == ts) {
+          push(ts, buf.next()._3); peers += 1
         }
-        peers.foreach { case (t, v, _) => push(t, v) }
         evict(ts - w)
         val mean = if (cnt == 0) None else Some(sum.doubleValue() / cnt)
         val mn = minDq.headOption.map(_._2)
         val mx = maxDq.headOption.map(_._2)
-        peers.foreach { case (t, _, emit) =>
-          if (emit) pending.enqueue(RollOut(ch, t, mean, mn, mx, cnt))
-        }
+        for (_ <- 0 until peers) pending.enqueue(RollOut(ch, ts, mean, mn, mx, cnt))
       }
 
       def hasNext: Boolean = {
@@ -413,67 +260,5 @@ object Rolling {
       }
       def next(): RollOut = { hasNext; pending.dequeue() }
     }
-  }
-
-  /** Same result as [[trailing]], linear time. Spark's
-    * `SlidingWindowFunctionFrame` re-evaluates a bounded frame's
-    * aggregate buffer from scratch every time the frame slides (no
-    * retraction), so [[trailing]] is O(n·frame) — on a dense channel
-    * (1 Hz samples, 1 h window → 3600-row frames) the per-row rescan
-    * dominates. This variant keeps the one channel-clustered shuffle +
-    * in-partition sort, then walks each channel once with the
-    * amortized-O(1) [[walk]] core. Equivalence to [[trailing]] (incl.
-    * nulls and ts ties) is pinned in RollingSpec; the gate serves
-    * either path from the same oracle.
-    */
-  def trailingFast(samples: DataFrame, windowSec: Long): DataFrame = {
-    val spark = samples.sparkSession
-    import spark.implicits._
-    val w = windowSec * Samples.NS
-    samples.select(col("channel"), lit(0L).as("_ck"), col("ts"),
-        col("value"), lit(true).as("_emit"))
-      .as[(String, Long, Long, Option[Double], Boolean)]
-      .repartition(col("channel"))
-      .sortWithinPartitions(col("channel"), col("ts"))
-      .mapPartitions(walk(_, w))
-      .toDF()
-  }
-
-  /** [[trailingFast]] with bounded per-task work under hot-channel
-    * skew: the time axis splits into `chunkSec` tumbling chunks that
-    * process in PARALLEL (the rolling analog of
-    * `Samples.monotonicDedupChunked`). Every row is shipped once to
-    * its own chunk and once more as look-back CONTEXT to the next
-    * chunk when a trailing window starting there can still reach it
-    * (`ts ≥ nextChunkStart − W`; at most one extra copy since
-    * `chunkSec ≥ windowSec` is required) — context rows prime the
-    * frame and are not emitted. One shuffle on (channel, chunk): a
-    * 1 Hz mega-channel at chunkSec = 86400 becomes ~86k-row tasks
-    * spread across the cluster instead of one straggler, at ≤ 2×
-    * shuffled rows. Chunked ≡ plain pinned in RollingSpec.
-    */
-  def trailingFastChunked(samples: DataFrame, windowSec: Long,
-                          chunkSec: Long): DataFrame = {
-    require(chunkSec >= windowSec,
-      s"chunkSec ($chunkSec) must be >= windowSec ($windowSec)")
-    val spark = samples.sparkSession
-    import spark.implicits._
-    val w = windowSec * Samples.NS
-    val c = chunkSec * Samples.NS
-    val base = samples.select(col("channel"), col("ts"), col("value"))
-    val own = base
-      .select(col("channel"), Samples.windowStart(col("ts"), c).as("_ck"),
-        col("ts"), col("value"), lit(true).as("_emit"))
-    val ctx = base
-      .select(col("channel"),
-        (Samples.windowStart(col("ts"), c) + lit(c)).as("_ck"),
-        col("ts"), col("value"), lit(false).as("_emit"))
-      .where(col("ts") >= col("_ck") - lit(w))
-    own.unionByName(ctx)
-      .as[(String, Long, Long, Option[Double], Boolean)]
-      .repartition(col("channel"), col("_ck"))
-      .sortWithinPartitions(col("channel"), col("_ck"), col("ts"))
-      .mapPartitions(walk(_, w))
-      .toDF()
   }
 }

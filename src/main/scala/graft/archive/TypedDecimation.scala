@@ -124,15 +124,6 @@ object TypedDecimation {
     decimateFromValidity(
       Decimation.withValidity(Samples.monotonicDedup(typed)), periodNanos)
 
-  /** Skew path: chunked validity (hot channels parallelize across
-    * time chunks — [[Decimation.withValidityChunked]]) feeding the
-    * same dispatch. Input must be monotone-clean per channel.
-    */
-  def decimateChunked(cleanTyped: DataFrame, periodNanos: Long,
-                      chunkNanos: Long): DataFrame =
-    decimateFromValidity(
-      Decimation.withValidityChunked(cleanTyped, chunkNanos), periodNanos)
-
   private def decimateFromValidity(validity: DataFrame,
                                    periodNanos: Long): DataFrame = {
     val sl = Decimation.slicesFromValidity(validity, periodNanos)

@@ -133,41 +133,6 @@ object Samples {
       .drop("_prev_max_ts")
   }
 
-  /** Skew-proof [[monotonicDedup]] for hot channels. The plain version
-    * runs one running-max window per channel — a 1 kHz channel over a
-    * year serializes 31M rows into a single task. Here the prefix max
-    * runs per (channel, arrival-chunk) so one channel parallelizes
-    * across chunks, and the cross-chunk hand-off (each chunk's
-    * running max must also dominate every EARLIER chunk's max ts) is
-    * stitched via a window over the tiny per-chunk summary — the same
-    * chunk-and-stitch pattern as
-    * [[graft.archive.Decimation.withValidityChunked]].
-    * `chunkRows` chunks the arrival sequence (`sample_id`), not time:
-    * the dedup invariant is defined over arrival order.
-    */
-  def monotonicDedupChunked(samples: DataFrame, chunkRows: Long): DataFrame = {
-    val chunked = samples.withColumn("_chunk",
-      (col("sample_id") - pmod(col("sample_id"), lit(chunkRows))) / chunkRows)
-    val inChunk = Window.partitionBy("channel", "_chunk").orderBy("sample_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val byChunk = Window.partitionBy("channel").orderBy("_chunk")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prevChunkMax = chunked.groupBy("channel", "_chunk")
-      .agg(max(col("ts")).as("_cmax"))
-      .withColumn("_prev_chunks_max", max(col("_cmax")).over(byChunk))
-      .select(col("channel").as("_bc"), col("_chunk").as("_bk"),
-        col("_prev_chunks_max"))
-    chunked
-      .withColumn("_prev_in_chunk", max(col("ts")).over(inChunk))
-      .join(broadcast(prevChunkMax),
-        col("channel") === col("_bc") && col("_chunk") === col("_bk"))
-      // greatest() skips nulls; both null ⇔ first-ever row → keep
-      .where(col("ts") > coalesce(
-        greatest(col("_prev_in_chunk"), col("_prev_chunks_max")),
-        lit(Long.MinValue)))
-      .drop("_chunk", "_prev_in_chunk", "_bc", "_bk", "_prev_chunks_max")
-  }
-
   /** Floor-align a nanosecond timestamp to a tumbling-window start,
     * epoch-aligned — `ts - ts mod period`, the reference's interval
     * alignment (ArchivedChannelDecimatedSamplesDecimationLevel.java:854-889).

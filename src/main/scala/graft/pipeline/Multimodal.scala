@@ -577,14 +577,16 @@ object Multimodal {
         val hot = blkAll.groupBy("blk", "bv")
           .agg(count(lit(1)).as("df"))
           .where(col("df") > cap).select("blk", "bv")
-        // cached: the capped frame feeds BOTH self-join sides below,
-        // and an unmaterialized cap chain re-runs the hot-block
+        // checkpointed: the capped frame feeds BOTH self-join sides
+        // below, and an unmaterialized cap chain re-runs the hot-block
         // aggregation (a full exchange over the block rows) once per
-        // side — with one cached copy the two block exchanges are
-        // identical and ReuseExchange collapses them (r12; the
-        // incrementalCandidates band-frame pattern). Narrow rows:
-        // (doc_id, blk, bv) — 4 per image.
-        blkAll.join(broadcast(hot), Seq("blk", "bv"), "left_anti").cache()
+        // side — with one materialized copy the two block exchanges
+        // are identical and ReuseExchange collapses them. A lazy local
+        // checkpoint, like the hash frame above, rather than cache():
+        // a cached entry would stay in the session's CacheManager after
+        // the call. Narrow rows: (doc_id, blk, bv) — 4 per image.
+        blkAll.join(broadcast(hot), Seq("blk", "bv"), "left_anti")
+          .localCheckpoint(false)
     }
     val cand = blk.as("a").join(blk.as("b"),
         col("a.blk") === col("b.blk") && col("a.bv") === col("b.bv") &&

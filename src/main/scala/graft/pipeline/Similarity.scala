@@ -660,17 +660,72 @@ object Similarity {
     // freshness metadata: the corpus size this quantizer was trained
     // over — the drift trigger compares live postings against it.
     // One JSON line written driver-side (metadata, not data): a
-    // 1-row Spark write was a whole scheduled job for a ~40-byte file
-    val fs = new org.apache.hadoop.fs.Path(path + "/meta")
-    val hfs = fs.getFileSystem(
+    // 1-row Spark write was a whole scheduled job for a ~40-byte file.
+    // Replaced, never emptied: the new meta is written under a hidden
+    // temp name, renamed into place as the next version, and only then
+    // are older versions removed — a concurrent ivfRefreshIfDrifted
+    // always finds a complete meta file (it reads the newest).
+    val dir = new org.apache.hadoop.fs.Path(path + "/meta")
+    val hfs = dir.getFileSystem(
       corpus.sparkSession.sparkContext.hadoopConfiguration)
-    hfs.delete(fs, true) // same clean-slate semantics as mode(overwrite)
-    hfs.mkdirs(fs)
-    val out = hfs.create(
-      new org.apache.hadoop.fs.Path(path + "/meta/meta.json"), true)
-    out.write(s"""{"base_count":${corpus.count()},"k":$k}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    val body = s"""{"base_count":${corpus.count()},"k":$k}"""
+    hfs.mkdirs(dir)
+    val old = metaFiles(hfs, dir)
+    val next = old.headOption.fold(1L)(f => metaVersion(f.getName) + 1L)
+    val tmp = new org.apache.hadoop.fs.Path(dir,
+      s".meta-${java.util.UUID.randomUUID()}.tmp")
+    val out = hfs.create(tmp, false)
+    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    val target = new org.apache.hadoop.fs.Path(dir, f"meta.$next%020d.json")
+    if (!hfs.rename(tmp, target))
+      throw new java.io.IOException(s"could not publish IVF meta $target")
+    old.filter(_.getName != target.getName).foreach(hfs.delete(_, false))
+  }
+
+  /** Meta file version: `meta.<n>.json` → n; legacy names (`meta.json`,
+    * the pre-r12 Spark write's `part-*.json`) rank below every version.
+    */
+  private def metaVersion(name: String): Long =
+    "meta\\.(\\d+)\\.json".r.findFirstMatchIn(name)
+      .fold(0L)(_.group(1).toLong)
+
+  /** The index's meta files, newest first. */
+  private def metaFiles(hfs: org.apache.hadoop.fs.FileSystem,
+                        dir: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.Path] =
+    if (!hfs.exists(dir)) Nil
+    else hfs.listStatus(dir).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".json"))
+      .map(_.getPath)
+      .sortBy(p => (-metaVersion(p.getName), p.getName))
+
+  /** (base_count, k) from the newest readable meta file, or None for a
+    * pre-policy index. A file listed but removed before it is opened
+    * (a rebuild published a newer version in between) sends the read
+    * back to a fresh listing.
+    */
+  private[graft] def ivfMeta(spark: org.apache.spark.sql.SparkSession,
+                             path: String): Option[(Long, Long)] = {
+    val dir = new org.apache.hadoop.fs.Path(path + "/meta")
+    val hfs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val kv = "\"(base_count|k)\"\\s*:\\s*(-?\\d+)".r
+    def parse(f: org.apache.hadoop.fs.Path): Option[(Long, Long)] = {
+      val in = hfs.open(f)
+      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+      val m = kv.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toLong).toMap
+      for (b <- m.get("base_count"); k <- m.get("k")) yield (b, k)
+    }
+    def attempt(): Either[Unit, Option[(Long, Long)]] =
+      try Right(metaFiles(hfs, dir).iterator.map(parse).collectFirst {
+        case Some(m) => m })
+      catch {
+        case _: java.io.FileNotFoundException => Left(())
+        case scala.util.control.NonFatal(_) => Right(None)
+      }
+    Iterator.continually(attempt()).take(3).collectFirst {
+      case Right(m) => m }.flatten
   }
 
   /** The index FRESHNESS policy ([[ivfIndexAppend]]'s other half):
@@ -693,26 +748,8 @@ object Similarity {
                           path: String,
                           maxAppendFraction: Double = 0.5): Boolean = {
     // metadata read stays driver-side (one ~40-byte JSON file; a
-    // spark.read.json here paid a schema-inference job + a read job).
-    // Glob *.json so indexes written by the pre-r12 1-row Spark write
-    // (part-*.json) parse identically.
-    val meta: Option[(Long, Long)] =
-      try {
-        val dir = new org.apache.hadoop.fs.Path(path + "/meta")
-        val hfs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val kv = "\"(base_count|k)\"\\s*:\\s*(-?\\d+)".r
-        hfs.listStatus(dir).iterator
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".json"))
-          .map { s =>
-            val in = hfs.open(s.getPath)
-            val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-            kv.findAllMatchIn(txt)
-              .map(m => m.group(1) -> m.group(2).toLong).toMap
-          }
-          .collectFirst { case m if m.contains("base_count") && m.contains("k") =>
-            (m("base_count"), m("k")) }
-      } catch { case _: Throwable => None }
+    // spark.read.json here paid a schema-inference job + a read job)
+    val meta = ivfMeta(spark, path)
     if (meta.isEmpty) return false // pre-policy index: no baseline
     val base = meta.get._1
     val k = meta.get._2.toInt
@@ -1037,6 +1074,12 @@ object Similarity {
     * vector is ever materialized whole on any single node beyond its
     * own row. Vectors absent from the pair graph are their own
     * (singleton) centroid.
+    *
+    * Contract: every `vec_a`/`vec_b` endpoint in `pairs` is a `vec_id`
+    * of `corpus`, and `vec_id` is unique there — `n_members` is counted
+    * over the pair graph, so a pair from a superset or stale frame
+    * over-counts its component. Pairs built from this corpus (e.g. by
+    * [[embeddingNearDup]]) satisfy it.
     */
   def clusterCentroids(corpus: DataFrame, pairs: DataFrame): DataFrame = {
     val comp = Dedup.connectedComponents(

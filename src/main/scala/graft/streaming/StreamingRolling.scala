@@ -7,7 +7,7 @@ import graft.archive.RollOut
 import StreamingDecimation.InSample
 
 /** ST-side trailing-window analytics: the streaming form of
-  * [[graft.archive.Rolling.trailingFast]]. Per-channel keyed state
+  * [[graft.archive.Rolling.trailing]]. Per-channel keyed state
   * holds the trailing `windowSec` span of samples (a ring bounded by
   * the densest window, the same bound as the batch walker's frame);
   * every arriving sample emits its trailing mean/min/max/count ONCE.

@@ -390,24 +390,6 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(r.getDouble(6) == 500.0 && r.getDouble(7) == 500.0)
   }
 
-  test("cusumShiftsChunked equals the plain detector across chunk sizes, including chunk-straddling excursions") {
-    // sawtooth + step so excursions straddle chunk boundaries; two
-    // channels with different phases; 1 s cadence over 300 s
-    val mk = (ch: String, phase: Int) => (0 until 300).map { i =>
-      val v = if (i < 150) 10.0 + ((i + phase) % 7) else 30.0 + (i % 5)
-      (ch, i.toLong * S, v, "", 0, 0, (ch.hashCode.toLong << 20) + i)
-    }
-    val df = frame(mk("a", 0) ++ mk("b", 3))
-    val plain = Analytics.cusumShifts(df, 0L, 300 * S,
-      slack = 3.0, threshold = 50.0).orderBy("channel").collect().toSeq
-    for (chunkSec <- Seq(7L, 64L, 1000L)) {
-      val chunked = Analytics.cusumShiftsChunked(df, 0L, 300 * S,
-        slack = 3.0, threshold = 50.0, chunkNs = chunkSec * S)
-        .orderBy("channel").collect().toSeq
-      assert(chunked == plain, s"chunkSec=$chunkSec")
-    }
-  }
-
   test("stalenessReport: median cadence, expected next, overdue flag, single-sample degenerate") {
     // "live": 10 s cadence, last at 90 s, asOf 100 s → not overdue
     // "dead": 10 s cadence but silent since 40 s → overdue at 100 s

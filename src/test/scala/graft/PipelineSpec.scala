@@ -637,6 +637,38 @@ class PipelineSpec extends AnyFunSuite {
     assert(served == direct && served.nonEmpty)
   }
 
+  test("IVF meta replacement never leaves the meta dir without a readable .json") {
+    implicit val s: SparkSession = spark
+    val e = (0L until 40L).map(i =>
+        (i, Array.tabulate(8)(d => math.sin(i * 1.9 + d).toFloat)))
+      .toDF("vec_id", "embedding")
+    val idx = java.nio.file.Files.createTempDirectory("ivfmeta").toString
+    Similarity.ivfBuildIndex(e, idx, k = 4)
+    val metaDir = new java.io.File(idx + "/meta")
+    def jsons(): Seq[String] = Option(metaDir.listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.endsWith(".json"))
+    // a concurrent reader (the drift trigger's view) polls the meta
+    // while two rebuilds replace it
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val polls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val misses = new java.util.concurrent.atomic.AtomicInteger(0)
+    val watcher = new Thread(() => while (!done.get) {
+      if (jsons().isEmpty || Similarity.ivfMeta(spark, idx).isEmpty)
+        misses.incrementAndGet()
+      polls.incrementAndGet()
+    })
+    watcher.start()
+    try {
+      Similarity.ivfBuildIndex(e, idx, k = 4)
+      Similarity.ivfBuildIndex(e.where($"vec_id" < 30), idx, k = 4)
+    } finally { done.set(true); watcher.join() }
+    assert(polls.get > 0)
+    assert(misses.get == 0,
+      s"${misses.get} of ${polls.get} polls found no readable meta file")
+    assert(jsons().size == 1, jsons().mkString(","))
+    assert(Similarity.ivfMeta(spark, idx) == Some((30L, 4L)))
+  }
+
   test("incremental IVF append serves identically to a full rebuild") {
     implicit val s: SparkSession = spark
     val e = (0L until 60L).map(i =>
@@ -1021,6 +1053,27 @@ class PipelineSpec extends AnyFunSuite {
     val capped = Multimodal.imageNearDupPairs(hashes, maxBlockFreq = Some(10))
     assert(capped.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       == Seq((98L, 99L)))                      // hot clique gone, real pair kept
+  }
+
+  test("capped image near-dup pairs leave no CacheManager entry behind") {
+    import graft.pipeline.Multimodal
+    implicit val s: SparkSession = spark
+    // a long-lived session (ServeMain, GraftSession) must not accumulate
+    // one cached block frame per call: the capped frame is materialized
+    // by a lazy local checkpoint, which the CacheManager never sees
+    val px = Array.tabulate(64)(i => (i % 8) * 7 + (i / 8) * 13)
+    val rows = (1L to 4L).map(id =>
+      Multimodal.MediaRow(id, "image/png", 0, Multimodal.PngCodec.encode(8, 8, px)))
+    val hashes = Multimodal.imageDHash(rows.toDF()).toDF()
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    assert(cacheManager.isEmpty)
+    val pairs = Multimodal.imageNearDupPairs(hashes, maxBlockFreq = Some(10))
+      .collect()
+    assert(pairs.length == 4 * 3 / 2)
+    assert(cacheManager.isEmpty,
+      "imageNearDupPairs left a cached frame in the session")
   }
 
   test("bpeTrain learns multi-round merges and stops when pairs run out") {

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +22,14 @@ class PlanShapeSpec extends AnyFunSuite {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
+
+  /** Every node of the physical plan, as planned before execution
+    * (AQE's initial plan, with the exchanges EnsureRequirements added). */
+  private def physicalNodes(df: DataFrame): Seq[SparkPlan] =
+    (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case n => n }
 
   private def count(hay: String, needle: String): Int =
     hay.sliding(needle.length).count(_ == needle)
@@ -51,18 +62,21 @@ class PlanShapeSpec extends AnyFunSuite {
       "ivfAssign plan shuffles the corpus through a join")
   }
 
-  test("z-score running form: only unbounded-preceding frames") {
-    // r13: zscoreRunning computes the trailing sums with O(1)-per-row
-    // running frames over ghost rows; a bounded RangeFrame here means
-    // the O(n*frame) sliding re-aggregation is back.
-    val df = graft.archive.Rolling.zscoreRunning(
-      graft.core.Samples.fromEvents(spark, sf), 3600L)
-    val p = plan(df)
-    assert(p.contains("unboundedpreceding"),
-      "zscoreRunning lost its running frames")
-    assert(!p.contains("specifiedwindowframe(RangeFrame, -"),
-      "zscoreRunning plan contains a bounded sliding RANGE frame — " +
-        "the ghost-row rewrite regressed to per-row re-aggregation")
+  test("rolling trailing and zscore: one shuffle, no Window node") {
+    // the walkers hash on channel once and walk each sorted partition;
+    // a second Exchange means an extra pass over the samples, and a
+    // Window node means a declarative O(n*frame) RANGE frame is back
+    // on the serving path.
+    val samples = graft.core.Samples.fromEvents(spark, sf)
+    for ((name, df) <- Seq(
+        "trailing" -> graft.archive.Rolling.trailing(samples, 3600L),
+        "zscore" -> graft.archive.Rolling.zscore(samples, 3600L))) {
+      val nodes = physicalNodes(df)
+      val shuffles = nodes.count(_.isInstanceOf[ShuffleExchangeLike])
+      assert(shuffles == 1, s"Rolling.$name plans $shuffles shuffle Exchanges")
+      assert(!nodes.exists(_.isInstanceOf[WindowExec]),
+        s"Rolling.$name plan contains a Window node")
+    }
   }
 
   test("lshNearest best-mate aggregation is hash-based, not sort-based") {

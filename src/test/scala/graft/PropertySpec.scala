@@ -96,42 +96,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("chunked validity (skew path) equals the per-channel window path") {
-    for (layout <- layouts(6, seed = 99)) {
-      val clean = Samples.monotonicDedup(frame(layout))
-      def norm(d: DataFrame) = d.select("channel", "win_start", "mean",
-          "covered_fraction", "n_samples")
-        .collect().map { r =>
-          (r.getLong(1),
-            if (r.isNullAt(2)) Long.MinValue else math.round(r.getDouble(2) * 1e9),
-            math.round(r.getDouble(3) * 1e9), r.getLong(4))
-        }.toSet
-      // chunk of 25 s cuts across the 10 s windows and sample gaps
-      assert(norm(Decimation.decimateChunked(clean, 10 * S, 25 * S)) ==
-        norm(Decimation.decimate(frame(layout), 10 * S)), s"$layout")
-    }
-  }
-
-  test("chunked monotonic dedup (skew path) equals the window path") {
-    // out-of-order and duplicate arrivals: shuffle ts against arrival
-    // order so the running max actually rejects rows across chunks
-    val gen: Gen[List[Long]] = for {
-      n <- Gen.choose(2, 60)
-      ts <- Gen.listOfN(n, Gen.choose(0L, 50L))
-    } yield ts
-    for (i <- 0 until 6; layout <- gen(Gen.Parameters.default, Seed(55 + i))) {
-      val df = layout.zipWithIndex.map { case (t, idx) =>
-        ("c" + (idx % 2), t * S, t.toDouble, "", 0, 0, idx.toLong)
-      }.toDF("channel", "ts", "value", "str_value", "severity", "status",
-        "sample_id")
-      def ids(d: DataFrame) =
-        d.select("sample_id").collect().map(_.getLong(0)).toSet
-      // chunk of 7 rows cuts across arrival runs
-      assert(ids(Samples.monotonicDedupChunked(df, 7)) ==
-        ids(Samples.monotonicDedup(df)), s"$layout")
-    }
-  }
-
   test("typed one-pass equals the declarative dispatch on random mixed-type layouts") {
     import graft.archive.TypedDecimation
     val tagGen = Gen.frequency(
@@ -176,10 +140,6 @@ class PropertySpec extends AnyFunSuite {
       val onepass = norm(TypedDecimation.decimateSorted(df, 10 * S)
         .withColumnRenamed("first", "_f"))
       assert(declarative == onepass, s"$layout")
-      // skew path: 25 s chunks cut across the 10 s windows
-      val chunked = norm(TypedDecimation.decimateChunked(
-        Samples.monotonicDedup(df), 10 * S, 25 * S))
-      assert(declarative == chunked, s"chunked $layout")
     }
   }
 
@@ -429,12 +389,6 @@ class PropertySpec extends AnyFunSuite {
         assert(gotTHi == tHi, s"seed ${1700 + i} tHi")
         assert(r.getDouble(6) == pkHi.toDouble / 1e6 &&
           r.getDouble(7) == pkLo.toDouble / 1e6, s"seed ${1700 + i} peaks")
-      }
-      // the chunk-parallel cascade must be byte-identical for ANY chunk
-      for (chunkSec <- Seq(3L, 17L, 500L)) {
-        val chunked = Analytics.cusumShiftsChunked(df, 0L, hi, slack,
-          threshold, chunkNs = chunkSec * S).collect().toSeq
-        assert(chunked == plain, s"seed ${1700 + i} chunk $chunkSec")
       }
     }
   }

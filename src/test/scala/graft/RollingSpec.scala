@@ -1,38 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.archive.Rolling
 
-/** The linear-time deque path must be bit-identical to the declarative
-  * RANGE-frame path — including null markers, ts ties (RANGE peers),
-  * channel boundaries, and the DECIMAL-routed mean.
+/** The linear-time walkers must be bit-identical to the declarative
+  * RANGE-frame reference ([[RollingReference]]) — including null
+  * markers, ts ties (RANGE peers), channel boundaries, and the
+  * DECIMAL-routed mean.
   */
 class RollingSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = TestSpark.session
   import spark.implicits._
 
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.toString).toSeq.sorted
+
   private def compare(rows: Seq[(String, Long, Option[Double])],
                       windowSec: Long): Unit = {
     val df = rows.toDF("channel", "ts", "value")
-    val slow = Rolling.trailingReference(df, windowSec)
-      .collect().map(_.toSeq).toSeq
-    val fast = Rolling.trailingFast(df, windowSec)
-      .collect().map(_.toSeq).toSeq
     // multiset equality (ties make per-row order ambiguous); doubles
     // compared bitwise via toString of the full row
-    assert(slow.map(_.toString).sorted == fast.map(_.toString).sorted)
+    val slow = sortedRows(RollingReference.trailing(df, windowSec))
+    assert(slow == sortedRows(Rolling.trailing(df, windowSec)),
+      s"windowSec=$windowSec")
     assert(slow.size == rows.size)
-    // chunked ≡ plain, with chunk boundaries cutting through the data
-    // (chunk = 2× window) and with one giant chunk
-    for (chunkSec <- Seq(windowSec * 2, windowSec * 1000)) {
-      val chunked = Rolling.trailingFastChunked(df, windowSec, chunkSec)
-        .collect().map(_.toSeq).toSeq
-      assert(slow.map(_.toString).sorted == chunked.map(_.toString).sorted,
-        s"chunkSec=$chunkSec")
-    }
   }
 
   test("trailingFast equals trailing on a dense single channel") {
@@ -83,7 +77,7 @@ class RollingSpec extends AnyFunSuite {
     } finally q.stop()
     val streamed = spark.table("sroll_spec")
       .collect().map(_.toSeq.toString).sorted
-    val batch = Rolling.trailingFast(
+    val batch = Rolling.trailing(
         rows.toDF("channel", "ts", "value"), 60L)
       .collect().map(_.toSeq.toString).sorted
     assert(streamed.toSeq == batch.toSeq)
@@ -120,20 +114,9 @@ class RollingSpec extends AnyFunSuite {
       (ch, ts, v)
     }
     val df = rows.toDF("channel", "ts", "value")
-    for (w <- Seq(1L, 90L, 100000L)) {
-      val slow = Rolling.zscoreReference(df, w).collect().map(_.toSeq.toString).sorted
-      val fast = Rolling.zscoreFast(df, w).collect().map(_.toSeq.toString).sorted
-      assert(slow.toSeq == fast.toSeq, s"windowSec=$w")
-      val chunked = Rolling.zscoreFastChunked(df, w, w * 2)
-        .collect().map(_.toSeq.toString).sorted
-      assert(slow.toSeq == chunked.toSeq, s"chunked windowSec=$w")
-      // the ghost-row running-frame form (the r13 gate path) must
-      // serve the RANGE reference's exact bytes too — ties, nulls,
-      // and ghost/real ts collisions included
-      val running = Rolling.zscoreRunning(df, w)
-        .collect().map(_.toSeq.toString).sorted
-      assert(slow.toSeq == running.toSeq, s"running windowSec=$w")
-    }
+    for (w <- Seq(1L, 90L, 100000L))
+      assert(sortedRows(RollingReference.zscore(df, w)) ==
+        sortedRows(Rolling.zscore(df, w)), s"windowSec=$w")
   }
 
   test("all-null frames yield null stats and zero count") {
@@ -141,7 +124,7 @@ class RollingSpec extends AnyFunSuite {
     val rows = Seq(("c", 0L, None), ("c", 5 * ns, None),
       ("c", 100 * ns, Some(1.5)))
     compare(rows, windowSec = 10L)
-    val out = Rolling.trailingFast(rows.toDF("channel", "ts", "value"), 10L)
+    val out = Rolling.trailing(rows.toDF("channel", "ts", "value"), 10L)
       .orderBy("ts").collect()
     assert(out(0).isNullAt(2) && out(0).getLong(5) == 0L)
     assert(out(2).getDouble(2) == 1.5)
